@@ -19,10 +19,13 @@ final case class Suite(name: String, expectations: Seq[Expectation])
   *
   *   1. optional tiny pre-agg job for z-score mean/stddev dependencies;
   *   2. ONE projection evaluating every window-free map expectation's
-  *      unexpected/missing boolean followed by ONE `df.agg` that bundles
-  *      row_count, per-expectation unexpected/missing counts, capped
-  *      unexpected-value samples (graft.functions.CollectLimited), and all
-  *      aggregate expectations' aggregates (identical aggregates deduped);
+  *      unexpected/missing boolean followed by ONE sums-only `df.agg` that
+  *      bundles row_count, per-expectation unexpected/missing counts and
+  *      all aggregate expectations' aggregates (identical aggregates
+  *      deduped); only when some unexpected count is non-zero, one more
+  *      map-only job ([[sampleRow]]) collects those expectations' samples,
+  *      each task stopping once every one holds `cap` values — the first
+  *      `cap` unexpected values in partition order;
   *   3. one job per WINDOW-shaped map expectation (unique / compound-unique
   *      / monotonic): its window would otherwise drag the whole fused
   *      projection through its shuffle — or a single-partition sort for
@@ -431,10 +434,20 @@ final class SuiteRunner(
     (proj.agg(aggCols.head, aggCols.tail.toSeq: _*), resolveAlias.toMap)
   }
 
-  /** Deferred sample pass: collect_limited value/index samples for ONLY the
-    * expectations whose fused counts showed unexpected rows. The projection
-    * selects just the referenced columns (parquet-pruned), and the
-    * ObjectHashAggregate this forces exists only on the failure path.
+  /** Deferred sample pass for ONLY the expectations whose fused counts
+    * showed unexpected rows: ONE map-only job (no shuffle, no aggregate)
+    * over a projection of each expectation's unexpected flag, value and
+    * the row's index JSON. Each task stops reading its partition as soon
+    * as every sampled expectation holds `cap` values — GE's own
+    * `filter(cond).limit(k)` (map_condition_auxilliary_methods.py:628-658),
+    * fused across expectations — and the driver concatenates the
+    * per-partition lists in partition-index order. The sample is therefore
+    * "the first `cap` unexpected values in partition order": repeatable for
+    * a fixed input layout, but not partitioning-independent.
+    *
+    * Returns, per entry of `toSample`, its (values, indexes) lists; a null
+    * unexpected value (e.g. to_not_be_null's rows) keeps its slot as a
+    * real null.
     *
     * Consistency note: counts come from the fused scan, samples from this
     * second scan — on a nondeterministic source (unstable sampling, a view
@@ -443,33 +456,55 @@ final class SuiteRunner(
   private def sampleRow(domainDf: DataFrame,
       toSample: Seq[MapExpectation],
       unexpectedCond: MapExpectation => Column,
-      collectValues: Boolean, collectIndexes: Boolean): Row = {
+      collectValues: Boolean, collectIndexes: Boolean)
+      : IndexedSeq[(Seq[String], Seq[String])] = {
     val cap =
       if (resultFormat.rank >= Complete.rank) MaxResultRecords
       else resultFormat.partialUnexpectedCount
+    // row layout: [__ix], then per expectation j: __u{j} [, __v{j}]
     val projCols = mutable.ArrayBuffer.empty[Column]
+    if (collectIndexes)
+      projCols += to_json(struct(indexColumns.map(col): _*)).as("__ix")
     toSample.zipWithIndex.foreach { case (e, j) =>
       projCols += unexpectedCond(e).as(s"__u$j")
-      // coalesce to the NUL-framed sentinel: a NULL unexpected VALUE (e.g.
-      // to_not_be_null's unexpected rows) must still occupy its list slot;
-      // the sentinel maps back to a real null at EVR build, so it cannot
-      // collide with a column whose actual value is the string "null"
-      // (NUL bytes never survive the engine's string sources)
-      if (collectValues)
-        projCols += coalesce(e.unexpectedValue,
-          lit(SuiteRunner.NullSentinel)).as(s"__v$j")
-      if (collectIndexes)
-        projCols += to_json(struct(indexColumns.map(col): _*)).as(s"__ix$j")
+      if (collectValues) projCols += e.unexpectedValue.as(s"__v$j")
     }
-    val proj = domainDf.select(projCols.toSeq: _*)
-    val aggCols = mutable.ArrayBuffer.empty[Column]
-    toSample.indices.foreach { j =>
-      if (collectValues)
-        aggCols += collect_limited(when(col(s"__u$j"), col(s"__v$j")), cap).as(s"__uv$j")
-      if (collectIndexes)
-        aggCols += collect_limited(when(col(s"__u$j"), col(s"__ix$j")), cap).as(s"__uix$j")
+    val rows = domainDf.select(projCols.toSeq: _*).queryExecution.toRdd
+
+    // the task closure captures only these locals (SuiteRunner is not
+    // Serializable)
+    val m = toSample.size
+    val base = if (collectIndexes) 1 else 0
+    val stride = if (collectValues) 2 else 1
+    val perPartition = rows.mapPartitions { it =>
+      val vals = Array.fill(m)(mutable.ArrayBuffer.empty[String])
+      val ixs = Array.fill(m)(mutable.ArrayBuffer.empty[String])
+      val hits = new Array[Int](m)
+      var open = if (cap > 0) m else 0 // expectations still below cap
+      while (open > 0 && it.hasNext) {
+        val r = it.next()
+        var j = 0
+        while (j < m) {
+          val u = base + j * stride
+          if (hits(j) < cap && !r.isNullAt(u) && r.getBoolean(u)) {
+            if (collectValues)
+              vals(j) += (if (r.isNullAt(u + 1)) null
+                else r.getUTF8String(u + 1).toString)
+            if (collectIndexes) ixs(j) += r.getUTF8String(0).toString
+            hits(j) += 1
+            if (hits(j) == cap) open -= 1
+          }
+          j += 1
+        }
+      }
+      Iterator.single((vals.map(_.toArray), ixs.map(_.toArray)))
     }
-    withRetry(proj.agg(aggCols.head, aggCols.tail.toSeq: _*).head())
+    // collect() returns the partitions' results in partition-index order
+    val parts = withRetry(perPartition.collect())
+    IndexedSeq.tabulate(m) { j =>
+      (parts.iterator.flatMap(_._1(j)).take(cap).toSeq,
+        parts.iterator.flatMap(_._2(j)).take(cap).toSeq)
+    }
   }
 
   private def runMapAggBatch(domainDf: DataFrame,
@@ -497,7 +532,7 @@ final class SuiteRunner(
           if (!collectValues && !collectIndexes) Nil
           else mapExps.indices.filter(k => row.getAs[Long](s"__uc$k") > 0L)
         val samplePos: Map[Int, Int] = toSample.zipWithIndex.toMap
-        lazy val sampleT: Try[Row] = Try(sampleRow(domainDf,
+        lazy val sampleT = Try(sampleRow(domainDf,
           toSample.map(k => mapExps(k)._1), unexpectedCond,
           collectValues, collectIndexes))
         mapExps.zipWithIndex.foreach { case ((e, i), k) =>
@@ -506,14 +541,8 @@ final class SuiteRunner(
             val mc = row.getAs[Long](s"__mc$k")
             val (vals, ixs) = samplePos.get(k) match {
               case None => (Nil, Nil)
-              case Some(j) =>
-                val s = sampleT.get // a sample failure fails only samplers
-                (if (collectValues)
-                  s.getAs[scala.collection.Seq[String]](s"__uv$j").toSeq
-                    .map(v => if (v == SuiteRunner.NullSentinel) null else v)
-                 else Nil,
-                 if (collectIndexes)
-                  s.getAs[scala.collection.Seq[String]](s"__uix$j").toSeq else Nil)
+              // a sample failure fails only samplers
+              case Some(j) => sampleT.get(j)
             }
             buildMapEvr(e, n, mc, uc, vals, ixs)
           })
@@ -608,9 +637,6 @@ object SuiteRunner {
   /** validation_graph.py:48 MAX_METRIC_COMPUTATION_RETRIES = 3. */
   val MaxAttempts = 3
 
-  /** NUL-framed marker for a null unexpected value riding collect_limited
-    * (which drops real nulls); mapped back to null at EVR build. */
-  private[core] val NullSentinel = "\u0000\u0000graft:null\u0000\u0000"
   private[core] val log = org.slf4j.LoggerFactory.getLogger(classOf[SuiteRunner])
 
   /** Shared daemon pool for concurrent metric-job SUBMISSION. Threads here

@@ -15,13 +15,15 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** collect_list with a hard cap, as a native Catalyst aggregate.
   *
-  * The reference collects `partial_unexpected_list` with a separate
-  * `filter(cond).limit(k).collect()` Spark job per expectation
-  * (map_condition_auxilliary_methods.py:628-658). We instead fuse the capped
-  * collection into the ONE suite-wide `df.agg` pass: buffers never exceed
-  * `limit` elements per partition or post-merge, so a 100-TB scan carries at
-  * most `limit × partitions` tiny values through the partial aggregates —
-  * unlike built-in `collect_list`, which is unbounded.
+  * Used where a capped sample must ride an aggregate that runs anyway: the
+  * uniqueness checks' groupBy (`SuiteRunner.runGroupedUnique`), where the
+  * sample rides the per-key counts, and the unexpected-rows query
+  * expectations, where the sample rides the true row count in one job.
+  * (Map expectations' `partial_unexpected_list` does NOT use it: their
+  * samples come from `SuiteRunner.sampleRow`'s early-exit map-only pass.)
+  * Buffers never exceed `limit` elements per partition or post-merge, so a
+  * 100-TB scan carries at most `limit × partitions` tiny values through the
+  * partial aggregates — unlike built-in `collect_list`, which is unbounded.
   *
   * Null inputs are skipped (matching collect_list), so `when(cond, value)`
   * yields "first `limit` values where cond".

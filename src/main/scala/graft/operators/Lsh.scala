@@ -47,7 +47,9 @@ object Lsh {
       val lo = math.max(dfs(i + 1), 1L).toDouble
       if (hi / lo >= bestRatio) {
         bestRatio = hi / lo
-        cap = dfs(i + 1).toInt // prune strictly-above: df > cap drops
+        // prune strictly-above: df > cap drops. A knee above Int.MaxValue
+        // documents clamps (a wrapped negative cap would prune everything)
+        cap = math.min(dfs(i + 1), Int.MaxValue.toLong).toInt
       }
       i += 1
     }

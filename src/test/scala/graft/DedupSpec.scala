@@ -577,6 +577,20 @@ class DedupSpec extends AnyFunSuite {
     assert(Lsh.tunedMaxDf(flat) == Lsh.DefaultMaxDf)
   }
 
+  test("tunedMaxDf: a knee above Int.MaxValue documents clamps, never wraps") {
+    import graft.operators.Lsh
+    def census(dfs: Long*) =
+      dfs.zipWithIndex.map { case (n, i) => (s"g$i", n) }.toDF("gram", "n_docs")
+    // the largest ratio (4e10 / 8e9 = 5) puts the cap at 8e9 documents; a
+    // plain toInt wraps that to a negative cap that prunes every shingle
+    assert(Lsh.tunedMaxDf(census(40000000000L, 8000000000L, 4000000000L)) ==
+      Int.MaxValue)
+    // with a 1-doc tail the 8e9 → 1 ratio is the knee: the cap is 1
+    assert(Lsh.tunedMaxDf(census(40000000000L, 8000000000L, 1L)) == 1)
+    // in range: the cap is the df just below the knee, as before
+    assert(Lsh.tunedMaxDf(census(9000L, 1500L, 1400L)) == 1500)
+  }
+
   test("ngram census: document frequency, deterministic ties, heap top-k") {
     val d = Seq(
       // "a b c" appears in docs 1,2,3 (TWICE in doc 1 — must count once),

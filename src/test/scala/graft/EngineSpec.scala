@@ -578,6 +578,84 @@ class EngineSpec extends AnyFunSuite {
       s"fused agg must sit inside WholeStageCodegen: $plan")
   }
 
+  test("sample pass: first cap unexpected values in partition order") {
+    // a Seq-backed frame: partition order is row order
+    val d = (1 to 100).map(i => (i, if (i % 3 == 0) None else Some(s"s$i")))
+      .toDF("x", "s")
+    val sr = Graft.validate(d, Suite("t", Seq(
+      ExpectColumnValuesToBeBetween("x", Some(1), Some(10)),
+      ExpectColumnValuesToNotBeNull("s"),
+      ExpectColumnValuesToBeBetween("x", Some(1), Some(95)))),
+      ResultFormat.Summary)
+    def partial(k: Int) =
+      sr.results(k).result("partial_unexpected_list").asInstanceOf[Seq[Any]]
+    assert(partial(0) == (11 to 30).map(_.toString))
+    // a null unexpected value keeps its slot as a real null
+    assert(sr.results(1).result("unexpected_count") == 33L)
+    assert(partial(1) == Seq.fill(20)(null))
+    assert(sr.results(1).result("partial_unexpected_counts") ==
+      Seq(Map("value" -> null, "count" -> 20)))
+    // fewer hits than the cap: all of them
+    assert(partial(2) == (96 to 100).map(_.toString))
+  }
+
+  test("sample pass: COMPLETE index list aligns with the values") {
+    val d = (1 to 300).map(i => (i, s"v$i")).toDF("x", "s")
+    val r = new SuiteRunner(ResultFormat.Complete, idColumns = Seq("x"))
+      .run(d, Suite("t", Seq(ExpectColumnValuesToMatchRegex("s", "^v[0-9]$"))))
+      .results.head
+    val vals = r.result("unexpected_list").asInstanceOf[Seq[String]]
+    val ixs = r.result("unexpected_index_list").asInstanceOf[Seq[String]]
+    assert(vals == (10 to 209).map(i => s"v$i"))
+    assert(ixs == vals.map(v => s"""{"x":${v.drop(1)}}"""))
+  }
+
+  test("sample pass: repeatable over a repartitioned input") {
+    val d = (1 to 500).toDF("x").repartition(4)
+    def sample() = Graft.validate(d, Suite("t", Seq(
+      ExpectColumnValuesToBeBetween("x", Some(1), Some(100)))),
+      ResultFormat.Summary).results.head
+      .result("partial_unexpected_list").asInstanceOf[Seq[String]]
+    val first = sample()
+    assert(first.size == 20 && first.distinct.size == 20)
+    assert(first.forall(_.toInt > 100))
+    assert(sample() == first)
+  }
+
+  test("sample pass: green suite submits no sample job, failing suite one map-only job") {
+    import org.apache.spark.GraftTestSpark
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageInfo}
+    val sc = spark.sparkContext
+    val src = spark.range(0, 2000, 1, 4).selectExpr("id AS x", "CAST(id AS STRING) AS s")
+    def jobsOf(suite: Suite): Seq[Seq[StageInfo]] = {
+      val jobs = collection.mutable.ArrayBuffer.empty[Seq[StageInfo]]
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          jobs.synchronized { jobs += j.stageInfos }
+      }
+      GraftTestSpark.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        Graft.validate(src, suite, ResultFormat.Summary)
+        GraftTestSpark.drain(sc)
+      } finally sc.removeSparkListener(listener)
+      jobs.synchronized(jobs.toList)
+    }
+    def mapOnly(stages: Seq[StageInfo]) = !stages.exists(GraftTestSpark.isShuffleStage)
+    val green = jobsOf(Suite("g", Seq(
+      ExpectColumnValuesToBeBetween("x", Some(0), Some(5000)),
+      ExpectColumnValuesToNotBeNull("s"))))
+    val red = jobsOf(Suite("r", Seq(
+      ExpectColumnValuesToBeBetween("x", Some(0), Some(999)),
+      ExpectColumnValuesToNotBeNull("s"))))
+    assert(green.nonEmpty && !green.exists(mapOnly),
+      s"all-green suite must run only the fused pass: $green")
+    assert(red.size == green.size + 1, s"green ${green.size}, failing ${red.size}")
+    val sampleJobs = red.filter(mapOnly)
+    assert(sampleJobs.size == 1 && sampleJobs.head.size == 1,
+      s"the sample pass must be one single-stage job without a shuffle: $red")
+  }
+
   test("cross-suite metric cache: shared fused domain is ONE Spark job") {
     val plans = collection.mutable.ArrayBuffer.empty[String]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
