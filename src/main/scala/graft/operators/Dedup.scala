@@ -127,15 +127,20 @@ object Dedup {
     * back to a shuffled semi-join that still carries only ids. */
   val BroadcastIdLimit: Long = 4000000L
 
-  /** Exact n-gram-Jaccard near-dup pairs WITHOUT MinHash: an inverted
-    * index on shingles proposes candidates (docs sharing ≥1 shingle),
-    * exact Jaccard verifies. `maxDf` is the standard stop-shingle pruning:
-    * shingles occurring in more than maxDf docs are dropped from candidate
-    * generation (a boilerplate shingle shared by 1M docs would propose
-    * 10¹² pairs) — any pair at a meaningful Jaccard threshold shares many
-    * non-frequent shingles, so recall is preserved while the index join
-    * stays bounded. Shuffle carries (shingle-hash, doc_id) pairs only;
-    * full shingle sets join back once per verified side. */
+  /** n-gram-Jaccard near-dup pairs WITHOUT MinHash: an inverted index on
+    * shingles proposes candidates (docs sharing ≥1 shingle) and counts
+    * |A∩B| in the same join. `maxDf` is the standard stop-shingle pruning:
+    * shingles occurring in more than maxDf docs are dropped from the index
+    * (a boilerplate shingle shared by 1M docs would propose 10¹² pairs).
+    *
+    * What `jaccard` is: |A∩B| counts only the shingles that survive
+    * pruning, while |A| and |B| are the FULL shingle-set sizes. At
+    * `maxDf = Int.MaxValue` nothing is pruned and the value is the exact
+    * Jaccard. With a finite cap it is |A∩B pruned| / (|A|+|B|-|A∩B
+    * pruned|), which UNDERESTIMATES the Jaccard of pairs that share
+    * above-cap shingles (DedupSpec pins this value; which of the two
+    * semantics to keep is an open design choice). The shuffle carries (shingle, doc_id, |shingles|)
+    * postings once. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, maxDf: Int = Lsh.DefaultMaxDf): DataFrame = {
     // Round-6 shape — verification FUSED into the index join (guide
@@ -146,9 +151,11 @@ object Dedup {
     // doc_a/doc_b sits ABOVE the exchange, so both exchange subtrees
     // canonicalize identically), and |A ∩ B| per (doc_a, doc_b) comes
     // straight out of the join as a partially-aggregated count. Jaccard
-    // is then |A∩B| / (|A|+|B|-|A∩B|) with the set sizes riding the
-    // postings — the exact-integer arithmetic is bit-identical to the
-    // previous array_intersect verification and to the DuckDB oracle.
+    // is then |A∩B| / (|A|+|B|-|A∩B|) with the FULL set sizes riding the
+    // postings. Unpruned (maxDf = Int.MaxValue) that exact-integer
+    // arithmetic is bit-identical to an array_intersect verification and
+    // to the DuckDB oracle; pruned, |A∩B| misses the above-cap shingles
+    // while the set sizes keep them, so the value is an underestimate.
     //
     // What this removes, measured at sf0.1 (5.1k docs, 1.18M candidate
     // pairs, Σdf² = 2.9M index-join rows): the per-pair shingle-ARRAY

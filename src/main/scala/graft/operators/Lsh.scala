@@ -34,7 +34,11 @@ object Lsh {
     * Jaccard threshold shares many below-knee shingles, so recall is
     * preserved (DedupSpec pins this on planted boilerplate). With no knee
     * (no boilerplate in the top-k) the default cap stands. The census is
-    * a top-k result (≤ k rows), so the collect here is bounded. */
+    * a top-k result (≤ k rows), so the collect here is bounded — and the
+    * knee search sees only those k rows (k = 25 at the callers). A
+    * boilerplate tier deeper than k grams shows no knee (the default cap
+    * stands) or a knee inside the boilerplate; either way its grams at
+    * or below the resulting cap survive pruning. */
   def tunedMaxDf(census: org.apache.spark.sql.DataFrame,
       minKneeRatio: Double = 4.0): Int = {
     val dfs = census.select("n_docs").collect().map(_.getLong(0))

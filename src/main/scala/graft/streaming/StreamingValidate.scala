@@ -19,7 +19,8 @@ import graft.transcripts.QualityFilter
   *    conv_id, carrying (last_turn_idx, last_role) per conversation —
   *    the streaming analogue of the batch lag window.
   *  - `qualityFilterStream`: all stateless quality-filter columns (langid,
-  *    ppl, heuristics, scrub) applied to a stream; role_seq is left to the
+  *    ppl, heuristics, scrub) applied to a stream through the same fused
+  *    `QfScore` kernel as the batch pipeline; role_seq is left to the
   *    stateful operator.
   */
 object StreamingValidate {
@@ -74,12 +75,11 @@ object StreamingValidate {
       }
   }
 
-  /** Stateless quality-filter columns on a stream (no lag window). */
-  def qualityFilterStream(stream: DataFrame): DataFrame = {
-    val scored = QualityFilter.withLangPpl(stream)
-    // withRules without the role-sequence window: recompute its stateless parts
-    QualityFilter.withRulesStateless(scored)
-  }
+  /** Stateless quality-filter columns on a stream (no lag window): the
+    * batch pipeline's fused scoring, so every column except role_seq_ok
+    * and keep equals the batch QualityFilter's. */
+  def qualityFilterStream(stream: DataFrame): DataFrame =
+    QualityFilter.withScoresFused(stream)
 
   /** Windowed filter-agreement monitor: confusion counts between a
     * reference label column and a cheap proxy per event-time window —

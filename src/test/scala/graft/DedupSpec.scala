@@ -95,6 +95,24 @@ class DedupSpec extends AnyFunSuite {
     assert(pruned == Set((1L, 2L)))
   }
 
+  test("ngramJaccardPairs pruned mode: pins the underestimate (pruned |A∩B|, " +
+      "full set sizes); semantics open under ROADMAP direction 4") {
+    // docs 1 and 2 share 4 of their 5 word 3-grams; one of the shared
+    // grams ("boiler plate text") also opens docs 3 and 4, so its document
+    // frequency is 4, above maxDf = 2
+    val d = Seq(
+      (1L, "boiler plate text a b c d"), (2L, "boiler plate text a b c e"),
+      (3L, "boiler plate text q r s"), (4L, "boiler plate text u v w"))
+      .toDF("doc_id", "text")
+    def pairs(maxDf: Int) = Dedup.ngramJaccardPairs(d, "doc_id", "text", 0.3, maxDf)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    // exact: |A∩B| = 4, |A| = |B| = 5 → 4 / (10 - 4)
+    assert(pairs(Int.MaxValue) == Map((1L, 2L) -> 4.0 / 6.0))
+    // pruned: |A∩B| drops the above-cap gram (3), the set sizes keep it (5)
+    // → 3 / (10 - 3), below the exact 2/3
+    assert(pairs(2) == Map((1L, 2L) -> 3.0 / 7.0))
+  }
+
   test("native MinHashSig ≡ Column-formulation signature") {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val a = d.select(col("doc_id"),

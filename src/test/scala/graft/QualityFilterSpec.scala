@@ -104,25 +104,18 @@ class QualityFilterSpec extends AnyFunSuite {
     assert(r.getAs[Double]("avg_logprob") == -11.0 / 5)
   }
 
-  test("expression scorer ≡ mapPartitions scorer (lang_ok, ppl_ok, avg_logprob)") {
-    val t = Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
-    val cols = Seq("conv_id", "turn_idx", "lang_ok", "ppl_ok", "avg_logprob")
-    val a = QualityFilter.withLangPpl(t).select(cols.head, cols.tail: _*)
-    val b = QualityFilter.withLangPplMapPartitions(t).select(cols.head, cols.tail: _*)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-  }
-
-  test("fused QfScore pipeline ≡ staged expressions on every column") {
-    val t = Transcripts.fromEvents(spark, "/root/testdata/sf0.001")
-    val staged = QualityFilter.withKeepForTest(
-      QualityFilter.withRulesStateless(
-        QualityFilter.withLangPpl(QualityFilter.withRoleSeq(t))))
-    val fused = QualityFilter(t)
-    assert(staged.columns.sorted.toSeq == fused.columns.sorted.toSeq)
-    val cols = fused.columns.sorted.toSeq
-    val a = fused.select(cols.head, cols.tail: _*)
-    val b = staged.select(cols.head, cols.tail: _*)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+  test("qf_score ≡ plain-Scala reference on every sf0.001 turn and fixed cases") {
+    val turns = Transcripts.fromEvents(spark, "/root/testdata/sf0.001").select("text")
+    assert(turns.count() == 1000)
+    val adjacent = "reach me a@b.com555-123-4567"
+    val big = (0 until 5000).map(i => s"tok$i").mkString(" ")
+    val fixed = Seq(Some(adjacent), Some(big), None).toDF("text")
+    val bad = QfReference.mismatches(turns.union(fixed), "text")
+    assert(bad.isEmpty, s"(text, field, kernel, reference): ${bad.take(5)}")
+    // the fixed cases pin what the reference computes, too
+    val (bigRef, adjRef) = (QfReference.score(big), QfReference.score(adjacent))
+    assert(bigRef.getInt(2) == 5000 && bigRef.getInt(3) == 5000)
+    assert(adjRef.getString(9) == "reach me [EMAIL][PHONE]" && !adjRef.getBoolean(6))
   }
 
   test("adjacent PII: earlier substitution enables later pattern, as chained") {
@@ -131,14 +124,10 @@ class QualityFilterSpec extends AnyFunSuite {
     // substitution creates one — the chained regexp_replace (and the DuckDB
     // oracle) scrub the phone, so the engine must too
     val d = Seq((1L, "reach me a@b.com555-123-4567")).toDF("id", "text")
-    val r = d.select(graft.functions.ScrubFlags.scrub_flags(col("text")).as("s"))
+    val r = d.select(graft.functions.QfScore.qf_score(col("text")).as("s"))
       .select(col("s.scrubbed_text"), col("s.phone_found")).head()
     assert(r.getString(0) == "reach me [EMAIL][PHONE]", r.getString(0))
     assert(!r.getBoolean(1)) // flag reflects the ORIGINAL text (no \b there)
-    // fused expression behaves identically
-    val q = d.select(graft.functions.QfScore.qf_score(col("text")).as("s"))
-      .select(col("s.scrubbed_text")).head()
-    assert(q.getString(0) == "reach me [EMAIL][PHONE]")
   }
 
   test("replicated user_ids keep distinct conversations (no lpad truncation)") {
