@@ -22,8 +22,11 @@ final case class Suite(name: String, expectations: Seq[Expectation])
   *      unexpected/missing boolean followed by ONE sums-only `df.agg` that
   *      bundles row_count, per-expectation unexpected/missing counts and
   *      all aggregate expectations' aggregates (identical aggregates
-  *      deduped); only when some unexpected count is non-zero, one more
-  *      map-only job ([[sampleRow]]) collects those expectations' samples,
+  *      deduped); regex rules run behind exact literal guards
+  *      ([[graft.functions.RegexGuard]]: `contains` of every literal a
+  *      match needs, ahead of `rlike`); only when some unexpected count is
+  *      non-zero, one more map-only job ([[sampleRow]]) collects those
+  *      expectations' samples (under the same guarded conditions),
   *      each task stopping once every one holds `cap` values — the first
   *      `cap` unexpected values in partition order;
   *   3. one job per WINDOW-shaped map expectation (unique / compound-unique

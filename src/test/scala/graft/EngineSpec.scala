@@ -456,6 +456,29 @@ class EngineSpec extends AnyFunSuite {
     assert(rg.success, rg.result)
   }
 
+  test("an invalid regex fails only its own expectation, not the fused domain") {
+    val d = Seq(Some("a"), None, Some("b"), Some("c")).toDF("s")
+    val bad = Seq(
+      ExpectColumnValuesToMatchRegex("s", "("),
+      ExpectColumnValuesToNotMatchRegex("s", "a["),
+      ExpectColumnValuesToMatchRegexList("s", Seq("a", "*")),
+      ExpectColumnValuesToNotMatchRegexList("s", Seq("b", "x{")),
+      CustomColumnMapExpectation.regexBased("expect_bad_regex", "s", "(?<"))
+    val sr = Graft.validate(d, Suite("t", bad ++ Seq(
+      ExpectColumnValuesToNotBeNull("s", mostly = 0.5),
+      ExpectTableRowCountToBeBetween(Some(1), None))))
+    sr.results.take(bad.size).foreach { r =>
+      assert(!r.success && r.exception.exists(_.contains("PatternSyntaxException")),
+        r.exception)
+    }
+    val notNull = sr.results(bad.size)
+    assert(notNull.success && notNull.exception.isEmpty, notNull.exception)
+    assert(notNull.result("unexpected_count") == 1L)
+    val rowCount = sr.results(bad.size + 1)
+    assert(rowCount.success && rowCount.exception.isEmpty, rowCount.exception)
+    assert(rowCount.observed.contains(4L))
+  }
+
   test("checkpoint run fans results out to actions") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_run").toString
     val logged = collection.mutable.ArrayBuffer.empty[String]
